@@ -5,8 +5,8 @@
 * before (r4 shape): full ``extract`` then project to the slim columns —
   every mega-doc pays the fat EXTRACTED_SCHEMA Arrow return leg
   (doc text + per-page text + metrics roughly triple the string volume);
-* after (r5 shape): ``_extract_salted(..., _result_row_slim,
-  EXTRACTED_SLIM_SCHEMA)`` — slim rows at the chunk merge.
+* after (r5 shape): ``extract_slim`` — slim rows at the chunk merge
+  (every row of the subset takes the salted path).
 
 Mega docs only exist at the larger scale factors; run at sf0.8.
 Writes BENCH/SLIM_SALTED.md.
@@ -59,13 +59,7 @@ def main() -> None:
         noop(X.extract(big, cfg).select(*slim_cols))
 
     def after():
-        noop(
-            X._extract_salted(
-                big, cfg,
-                row_fn=X._result_row_slim,
-                out_schema=X.EXTRACTED_SLIM_SCHEMA,
-            )
-        )
+        noop(X.extract_slim(big, cfg))
 
     # warmup both paths once, then interleave measured passes
     before()
@@ -89,7 +83,7 @@ Mega-doc subset of {sf_dir.rsplit('/', 1)[-1]} (n_spans > \
 {cfg.salt_threshold}): {n_big} docs, {n_spans} spans, local[{cpus}].
 "before" is the r4 shape (full ``extract`` then project — the old
 ``extract_slim`` mega-doc branch); "after" emits slim rows at the chunk
-merge (`_extract_salted` with the slim row builder).  Interleaved
+merge (`extract_slim`, all rows salted).  Interleaved
 passes, warmup excluded.
 
 | variant | passes (s) | min | median |

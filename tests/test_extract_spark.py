@@ -4,6 +4,8 @@ order) per document — under any partitioning, including the salted
 mega-document path."""
 
 import dataclasses
+import re
+import warnings
 
 import pytest
 import pyspark.sql.functions as F
@@ -104,8 +106,27 @@ def test_salted_slim_equals_salted_full(spark, docs_path):
     cfg = dataclasses.replace(DEFAULT_CONFIG, salt_threshold=20,
                               salt_chunk_spans=8)
     docs = spark.read.parquet(docs_path)
-    slim = {r["doc_id"]: r for r in X.extract_slim(docs, cfg).collect()}
-    full = {r["doc_id"]: r for r in X.extract(docs, cfg).collect()}
+    jsc = spark.sparkContext._jsc
+    persisted_before = set(jsc.getPersistentRDDs().keySet().toArray())
+    # planning and running both salted surfaces warns about nothing.
+    # (ResourceWarning stays ignored, as by default: it comes from result
+    # sockets pyspark leaves to the garbage collector, whenever it runs.)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        warnings.simplefilter("ignore", ResourceWarning)
+        slim_df = X.extract_slim(docs, cfg)
+        full_df = X.extract(docs, cfg)
+        plan = full_df._jdf.queryExecution().executedPlan().toString()
+        slim = {r["doc_id"]: r for r in slim_df.collect()}
+        full = {r["doc_id"]: r for r in full_df.collect()}
+    # ... and pins no cache (the salted chunks have a single consumer)
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= persisted_before
+    # salted branch: chunk and classify MapInArrow + grouped merge; with
+    # the main path's MapInArrow that is 3 + 1 Python nodes, all Arrow
+    assert len(re.findall(r"\bMapInArrow\b", plan)) == 3, plan
+    assert len(re.findall(r"\bFlatMapGroupsInArrow\b", plan)) == 1, plan
+    for node in ("InPandas", "BroadcastHashJoin", "InMemoryTableScan"):
+        assert node not in plan, plan
     assert set(slim) == set(full)
     for doc_id, f in full.items():
         s = slim[doc_id]
@@ -118,30 +139,102 @@ def test_salted_slim_equals_salted_full(spark, docs_path):
     }
 
 
+def _oracle_reject_reason(spans, cfg):
+    """classify_document's reject reason; a raise is an error:<Exc> reject."""
+    try:
+        return C.classify_document(spans, cfg).reject_reason
+    except Exception as exc:  # noqa: BLE001
+        return f"error:{type(exc).__name__}"
+
+
 def test_null_spans_doc_rejects_not_vanishes(spark):
     """size(NULL) is NULL since Spark 3.0: without the guard, a NULL
     spans array satisfies neither side of the small/salted split and the
     doc silently vanishes.  It must surface as a 'null_spans' reject on
     BOTH the full and slim paths (and with/without a maintained n_spans
-    column)."""
+    column).  Oversized and malformed docs reject with classify_document's
+    reason on the main and the salted path alike."""
     schema = (
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>"
     )
-    rows = [
-        ("ok_empty", []),
-        ("nullish", None),
-    ]
-    base = spark.createDataFrame(rows, schema)
+    run = "r;p={};s=;psz=12.0;pb=-;pi=-;sz=12.0;b=-;i=-;u=0;m=0;n=0"
+    spans = {
+        "ok_empty": [],
+        "nullish": None,
+        # over max_doc_spans below: rejected unclassified
+        "too_big": [(run.format(i), "word " * 60, None, i) for i in range(6)],
+        # malformed paragraph index: classify_document raises ValueError
+        "bad_par": [(run.format(0), "t", None, 0),
+                    (run.format("xy"), "t", None, 1)],
+    }
+    base = spark.createDataFrame(list(spans.items()), schema)
     with_meta = base.withColumn("n_spans", F.size("spans"))  # NULL for b2
-    for docs in (base, with_meta):
-        for fn in (X.extract, X.extract_slim):
-            got = {
-                r["doc_id"]: r["reject_reason"]
-                for r in fn(docs).select("doc_id", "reject_reason").collect()
-            }
-            assert set(got) == {"ok_empty", "nullish"}, (fn.__name__, got)
-            assert got["nullish"] == "null_spans", fn.__name__
+    plain = dataclasses.replace(DEFAULT_CONFIG, max_doc_spans=5)
+    # salted: every non-empty doc takes the chunk/classify/merge path
+    salted = dataclasses.replace(plain, salt_threshold=1, salt_chunk_spans=1)
+    for cfg in (plain, salted):
+        expected = {
+            d: _oracle_reject_reason(s, cfg)
+            for d, s in spans.items() if s is not None
+        }
+        assert expected["too_big"] == "too_many_spans"
+        assert expected["bad_par"] == "error:ValueError"
+        expected["nullish"] = "null_spans"
+        for docs in (base, with_meta):
+            for fn in (X.extract, X.extract_slim):
+                got = {
+                    r["doc_id"]: r["reject_reason"]
+                    for r in fn(docs, cfg)
+                    .select("doc_id", "reject_reason").collect()
+                }
+                assert got == expected, (fn.__name__, cfg, got)
+
+
+# Reference row-dict builders: one dict per row and per span, converted with
+# RecordBatch.from_pylist.  The column-wise builders must match them.
+def _out_spans_to_rows(spans: list[tuple], span_pages: list[int]) -> list[dict]:
+    pages = span_pages if len(span_pages) == len(spans) else [1] * len(spans)
+    return [
+        {"kind": k, "text": t, "media_ref": m, "offset": o, "page": p}
+        for (k, t, m, o), p in zip(spans, pages)
+    ]
+
+
+def _pages_to_rows(pages: list[tuple]) -> list[dict]:
+    return [
+        {"page": p, "text": t, "counts": {k: int(v) for k, v in c.items()}}
+        for (p, t, c) in pages
+    ]
+
+
+def _result_row_slim(doc_id: str, res: C.DocResult) -> dict:
+    return {
+        "doc_id": doc_id,
+        "ok": res.ok,
+        "reject_reason": res.reject_reason,
+        "spans": _out_spans_to_rows(res.spans, res.span_pages),
+    }
+
+
+def _result_row(doc_id: str, res: C.DocResult, metrics: dict) -> dict:
+    return {
+        **_result_row_slim(doc_id, res),
+        "pages": _pages_to_rows(res.pages),
+        "text": res.text,
+        "counts": {k: int(v) for k, v in res.counts.items()},
+        "quality": float(res.quality),
+        "builtin_props": res.builtin_props,
+        "props": res.props,
+        "lang_tags": list(res.lang_tags),
+        "num_words": int(metrics["num_words"]),
+        "num_chars": int(metrics["num_chars"]),
+        "num_alph_chars": int(metrics["num_alph_chars"]),
+        "num_numeric_chars": int(metrics["num_numeric_chars"]),
+        "num_alphnum_chars": int(metrics["num_alphnum_chars"]),
+        "alnum_prop": float(metrics["alnum_prop"]),
+        "alph_to_num_ratio": float(metrics["alph_to_num_ratio"]),
+    }
 
 
 def test_colwise_record_batch_matches_from_pylist():
@@ -182,7 +275,7 @@ def test_colwise_record_batch_matches_from_pylist():
     assert any(not r.ok for _, r in results)  # rejects are exercised
 
     slim_schema = to_arrow_schema(X.EXTRACTED_SLIM_SCHEMA)
-    rows_slim = [X._result_row_slim(d, r) for d, r in results]
+    rows_slim = [_result_row_slim(d, r) for d, r in results]
     expect_slim = pa.RecordBatch.from_pylist(rows_slim, schema=slim_schema)
     assert X._slim_record_batch(results, slim_schema).equals(expect_slim)
 
@@ -191,7 +284,7 @@ def test_colwise_record_batch_matches_from_pylist():
         [r.text if r.ok else "" for _, r in results]
     )
     rows_full = [
-        X._result_row(d, r, m) for (d, r), m in zip(results, metrics)
+        _result_row(d, r, m) for (d, r), m in zip(results, metrics)
     ]
     expect_full = pa.RecordBatch.from_pylist(rows_full, schema=full_schema)
     assert X._full_record_batch(results, metrics, full_schema).equals(

@@ -1080,6 +1080,20 @@ def classify_document(
         (kind, text, media_ref, i)
         for i, (kind, text, media_ref) in enumerate(out_spans)
     ]
+    props, lang_tags = element_meta(elements)
+    return DocResult(
+        True, None, final, doc_text, counts, quality, builtin_props,
+        span_pages=span_pages, pages=pages, props=props, lang_tags=lang_tags,
+    )
+
+
+def element_meta(
+    elements: Iterable[Element],
+) -> tuple[dict[str, str], list[str]]:
+    """D12 document-intrinsic metadata of the Meta elements: the property
+    map (a later value wins) and the distinct language tags.  The reference
+    returns list(set(...)) (oxml_metadata.py:33-41); sorted here so
+    distributed results are deterministic."""
     props: dict[str, str] = {}
     lang_tags: set[str] = set()
     for el in elements:
@@ -1088,13 +1102,7 @@ def classify_document(
                 lang_tags.add(el.value)
             elif el.key:
                 props[el.key] = el.value
-    return DocResult(
-        True, None, final, doc_text, counts, quality, builtin_props,
-        span_pages=span_pages, pages=pages, props=props,
-        # the reference returns list(set(...)) (oxml_metadata.py:33-41);
-        # sorted here so distributed results are deterministic
-        lang_tags=sorted(lang_tags),
-    )
+    return props, sorted(lang_tags)
 
 
 def quality_from_counter(

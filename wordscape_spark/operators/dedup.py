@@ -133,12 +133,8 @@ def minhash_duplicate_pairs(
     verification join, and Catalyst's project-collapse would otherwise
     recompute the (expensive) signature expressions per consumer.
     """
-    from wordscape_spark.operators.extract import ensure_parallelism
-
     sigs = with_minhash(
-        ensure_parallelism(
-            df.select(F.col(id_col).cast("string").alias("doc_id"), text_col)
-        ),
+        df.select(F.col(id_col).cast("string").alias("doc_id"), text_col),
         fast=fast,
     ).select(
         "doc_id", "sh", *[f"band{b}" for b in range(LSH_BANDS)]

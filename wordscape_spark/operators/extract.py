@@ -3,29 +3,32 @@
 Execution strategy (designed for 10^12-row scale):
 
 * The input table has one row per document, so the normal path is a pure
-  ``mapInPandas`` — **zero shuffle**: each Arrow batch of documents is
+  ``mapInArrow`` — **zero shuffle**: each Arrow batch of documents is
   classified independently.  (The reference's per-document two-pass heuristic
   would force a ``groupBy(doc_id)`` only if spans arrived exploded.)
 * Skewed mega-documents (``size(spans) > cfg.salt_threshold``) would stall a
   task the way one huge doc stalls a reference worker (SURVEY §4.1).  They
-  take the *salted path*: spans are chunked at element boundaries, the
-  per-document font-heuristic state (which is additive per paragraph) is
-  computed per chunk and merged, broadcast-joined back to the chunks, chunks
-  are classified in parallel, and partial results are re-merged in chunk
-  order.  Results are bit-identical to the single-pass path (tested).
-* Oversized documents are rejected *natively* (``F.size < …``) before any
-  Python executes — the cheap-gate-first ordering the reference hand-rolls
-  (annotator_process.py:292-319) expressed as Catalyst-visible predicates.
+  take the *salted path*, three Arrow stages: the task that reads a
+  mega-doc splits it into chunks at element boundaries and attaches the
+  document's font-heuristic state (additive per paragraph, merged in chunk
+  order) to every chunk; the chunks are spread across the cluster and
+  classified in parallel; the partial results are re-merged per document in
+  chunk order and emitted through the same batch builders as the normal
+  path.  Results are bit-identical to the single-pass path (tested).
+* The size split is a Catalyst-visible predicate on the maintained
+  ``n_spans`` column (pushed to the parquet scan) or on ``size(spans)``;
+  oversized documents (``cfg.max_doc_spans``) become ``too_many_spans``
+  reject rows without being classified.
 """
 
 from __future__ import annotations
 
-import json
-from typing import Iterator
+from collections import OrderedDict
 
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -115,465 +118,276 @@ EXTRACTED_SLIM_SCHEMA = StructType(
     ]
 )
 
-
-def _result_row_slim(doc_id: str, res: C.DocResult) -> dict:
-    return {
-        "doc_id": doc_id,
-        "ok": res.ok,
-        "reject_reason": res.reject_reason,
-        "spans": _out_spans_to_rows(res.spans, res.span_pages),
-    }
-
+# salted path, stage 1 → 2: one row per chunk; the document's merged
+# font-heuristic state rides on every chunk row (NULL on a reject row)
+_FONT_STATE_TYPE = StructType(
+    [
+        StructField("counts", MapType(StringType(), LongType())),
+        StructField("apps", MapType(StringType(), LongType())),
+        StructField(
+            "tracker",
+            ArrayType(
+                StructType(
+                    [
+                        StructField("fp", StringType()),
+                        StructField("level", IntegerType()),
+                    ]
+                )
+            ),
+        ),
+    ]
+)
 
 _CHUNK_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
         StructField("chunk_idx", IntegerType()),
+        StructField("reject_reason", StringType()),
         StructField("spans", ArrayType(SPAN_TYPE)),
-        StructField("font_state", StringType()),
+        StructField("font_state", _FONT_STATE_TYPE),
     ]
 )
 
-_FONTMAP_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("font_state", StringType()),
-    ]
-)
-
+# salted path, stage 2 → 3: one classified chunk (pages are chunk-local)
 _PARTIAL_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
         StructField("chunk_idx", IntegerType()),
-        StructField("spans", ArrayType(OUT_SPAN_TYPE)),  # page is chunk-local
-        StructField("pages", ArrayType(PAGE_TYPE)),      # chunk-local pages
+        StructField("reject_reason", StringType()),
+        StructField("spans", ArrayType(OUT_SPAN_TYPE)),
+        StructField("pages", ArrayType(PAGE_TYPE)),
         StructField("text", StringType()),
         StructField("counts", MapType(StringType(), LongType())),
-        StructField("char_counter", StringType()),
-        StructField("meta_json", StringType()),  # props/lang_tags of chunk
+        # builtin/heuristic char mass per entity id (classify_elements)
+        StructField(
+            "char_counter", MapType(IntegerType(), ArrayType(DoubleType()))
+        ),
+        StructField("props", MapType(StringType(), StringType())),
+        StructField("lang_tags", ArrayType(StringType())),
     ]
 )
 
-
-def _spans_to_tuples(spans) -> list[tuple]:
-    return [
-        (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans
-    ]
-
-
-def _spans_to_rows(spans: list[tuple]) -> list[dict]:
-    return [
-        {"kind": k, "text": t, "media_ref": m, "offset": o}
-        for (k, t, m, o) in spans
-    ]
+_INT_METRICS = (
+    "num_words",
+    "num_chars",
+    "num_alph_chars",
+    "num_numeric_chars",
+    "num_alphnum_chars",
+)
+_FLOAT_METRICS = ("alnum_prop", "alph_to_num_ratio")
 
 
-def _out_spans_to_rows(spans: list[tuple], span_pages: list[int]) -> list[dict]:
-    pages = span_pages if len(span_pages) == len(spans) else [1] * len(spans)
-    return [
-        {"kind": k, "text": t, "media_ref": m, "offset": o, "page": p}
-        for (k, t, m, o), p in zip(spans, pages)
-    ]
-
-
-def _pages_to_rows(pages: list[tuple]) -> list[dict]:
-    return [
-        {"page": p, "text": t, "counts": {k: int(v) for k, v in c.items()}}
-        for (p, t, c) in pages
-    ]
-
-
-def _result_row(doc_id: str, res: C.DocResult, metrics=None) -> dict:
-    # D10 metrics are computed here, inside the classification UDF: they
-    # parallelize with classification at zero extra Arrow traffic.  (A native
-    # column-expression variant was measured slower end-to-end — JVM string
-    # passes over multi-MB mega-doc texts straggle; see operators/text.py
-    # metrics_exprs for the SQL-side twin used by the oracle.)  Batch callers
-    # pass precomputed ``metrics`` (one vectorized text_metrics_batch pass
-    # per Arrow batch instead of two regex subs + a translate per doc).
-    if metrics is None:
-        metrics = C.text_metrics(res.text if res.ok else "")
-    return {
-        "doc_id": doc_id,
-        "ok": res.ok,
-        "reject_reason": res.reject_reason,
-        "spans": _out_spans_to_rows(res.spans, res.span_pages),
-        "pages": _pages_to_rows(res.pages),
-        "text": res.text,
-        "counts": {k: int(v) for k, v in res.counts.items()},
-        "quality": float(res.quality),
-        "builtin_props": res.builtin_props,
-        "props": res.props,
-        "lang_tags": list(res.lang_tags),
-        "num_words": int(metrics["num_words"]),
-        "num_chars": int(metrics["num_chars"]),
-        "num_alph_chars": int(metrics["num_alph_chars"]),
-        "num_numeric_chars": int(metrics["num_numeric_chars"]),
-        "num_alphnum_chars": int(metrics["num_alphnum_chars"]),
-        "alnum_prop": float(metrics["alnum_prop"]),
-        "alph_to_num_ratio": float(metrics["alph_to_num_ratio"]),
-    }
-
-
-def _safe_classify(spans, cfg: ExtractConfig) -> C.DocResult:
-    """Per-document fault isolation: a malformed document becomes a reject
-    row instead of failing the task (the reference's failed_*.jsonl model,
-    annotator_process.py:199-282 — at 10^12 rows one bad doc must never
-    kill a job)."""
-    if spans is None:
-        # NULL spans array (producer wrote a null, not []): a distinct
-        # marker, not error:TypeError from inside the classifier
-        return C.DocResult(False, "null_spans", [], "", {}, 0.0, {})
-    try:
-        return C.classify_document(_spans_to_tuples(spans), cfg)
-    except Exception as exc:  # noqa: BLE001 — intentional isolation boundary
-        return C.DocResult(
-            False, f"error:{type(exc).__name__}", [], "", {}, 0.0, {}
-        )
-
-
-def _make_classify_fn(cfg: ExtractConfig):
-    def classify_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                _result_row(doc_id, _safe_classify(spans, cfg))
-                for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-            ]
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return classify_batches
-
-
-def _slim_record_batch(results, arrow_schema):
-    """Column-wise Arrow assembly of slim rows (doc_id, DocResult pairs).
-
-    Byte-identical to ``RecordBatch.from_pylist`` over ``_result_row_slim``
-    rows (pinned by test) without materializing a dict per row and per span
-    — from_pylist re-hashes every field name for every span."""
-    import pyarrow as pa
-
-    S = pa.string()
-    I32 = pa.int32()
-    doc_ids = []
-    oks = []
-    rejects = []
-    sk: list = []
-    st: list = []
-    sm: list = []
-    so: list = []
-    sp: list = []
-    soff = [0]
-    stot = 0
-    for d, r in results:
-        doc_ids.append(d)
-        oks.append(r.ok)
-        rejects.append(r.reject_reason)
-        spans = r.spans
-        if spans:
-            pages = (
-                r.span_pages
-                if len(r.span_pages) == len(spans)
-                else [1] * len(spans)
-            )
-            ks, ts, ms, os_ = zip(*spans)
-            sk.extend(ks)
-            st.extend(ts)
-            sm.extend(ms)
-            so.extend(os_)
-            sp.extend(pages)
-            stot += len(spans)
-        soff.append(stot)
-    spans_arr = pa.ListArray.from_arrays(
-        pa.array(soff, I32),
-        pa.StructArray.from_arrays(
-            [pa.array(sk, S), pa.array(st, S), pa.array(sm, S),
-             pa.array(so, I32), pa.array(sp, I32)],
-            names=["kind", "text", "media_ref", "offset", "page"],
-        ),
-    )
-    return pa.RecordBatch.from_arrays(
-        [pa.array(doc_ids, S), pa.array(oks, pa.bool_()),
-         pa.array(rejects, S), spans_arr],
-        schema=arrow_schema,
-    )
-
-
-def _full_record_batch(results, metrics, arrow_schema):
-    """Column-wise Arrow assembly of full EXTRACTED_SCHEMA rows — the
-    column-by-column twin of ``_result_row`` + ``from_pylist`` (map entry
-    order = dict insertion order, exactly like from_pylist; pinned by
-    test)."""
-    import pyarrow as pa
-
-    S = pa.string()
-    I32 = pa.int32()
-    I64 = pa.int64()
-    F64 = pa.float64()
-    doc_ids = []
-    oks = []
-    rejects = []
-    texts = []
-    quality = []
-    sk: list = []
-    st: list = []
-    sm: list = []
-    so: list = []
-    sp: list = []
-    soff = [0]
-    pg_num: list = []
-    pg_text: list = []
-    pgoff = [0]
-    pgc_k: list = []
-    pgc_v: list = []
-    pgcoff = [0]
-    cnt_k: list = []
-    cnt_v: list = []
-    cntoff = [0]
-    bp_k: list = []
-    bp_v: list = []
-    bpoff = [0]
-    pr_k: list = []
-    pr_v: list = []
-    proff = [0]
-    lt: list = []
-    ltoff = [0]
-    nw = []
-    nc = []
-    nal = []
-    nnu = []
-    nan_ = []
-    ap = []
-    ar = []
-    stot = ptot = pctot = ctot = btot = prtot = ltot = 0
-    for (d, r), m in zip(results, metrics):
-        doc_ids.append(d)
-        oks.append(r.ok)
-        rejects.append(r.reject_reason)
-        texts.append(r.text)
-        quality.append(float(r.quality))
-        spans = r.spans
-        if spans:
-            pages = (
-                r.span_pages
-                if len(r.span_pages) == len(spans)
-                else [1] * len(spans)
-            )
-            ks, ts, ms, os_ = zip(*spans)
-            sk.extend(ks)
-            st.extend(ts)
-            sm.extend(ms)
-            so.extend(os_)
-            sp.extend(pages)
-            stot += len(spans)
-        soff.append(stot)
-        for p, t_, c in r.pages:
-            pg_num.append(p)
-            pg_text.append(t_)
-            for k, v in c.items():
-                pgc_k.append(k)
-                pgc_v.append(int(v))
-                pctot += 1
-            pgcoff.append(pctot)
-            ptot += 1
-        pgoff.append(ptot)
-        for k, v in r.counts.items():
-            cnt_k.append(k)
-            cnt_v.append(int(v))
-            ctot += 1
-        cntoff.append(ctot)
-        for k, v in r.builtin_props.items():
-            bp_k.append(k)
-            bp_v.append(v)
-            btot += 1
-        bpoff.append(btot)
-        for k, v in r.props.items():
-            pr_k.append(k)
-            pr_v.append(v)
-            prtot += 1
-        proff.append(prtot)
-        lt.extend(r.lang_tags)
-        ltot += len(r.lang_tags)
-        ltoff.append(ltot)
-        nw.append(int(m["num_words"]))
-        nc.append(int(m["num_chars"]))
-        nal.append(int(m["num_alph_chars"]))
-        nnu.append(int(m["num_numeric_chars"]))
-        nan_.append(int(m["num_alphnum_chars"]))
-        ap.append(float(m["alnum_prop"]))
-        ar.append(float(m["alph_to_num_ratio"]))
-    spans_arr = pa.ListArray.from_arrays(
-        pa.array(soff, I32),
-        pa.StructArray.from_arrays(
-            [pa.array(sk, S), pa.array(st, S), pa.array(sm, S),
-             pa.array(so, I32), pa.array(sp, I32)],
-            names=["kind", "text", "media_ref", "offset", "page"],
-        ),
-    )
-    pages_arr = pa.ListArray.from_arrays(
-        pa.array(pgoff, I32),
-        pa.StructArray.from_arrays(
-            [
-                pa.array(pg_num, I32),
-                pa.array(pg_text, S),
-                pa.MapArray.from_arrays(
-                    pa.array(pgcoff, I32),
-                    pa.array(pgc_k, S),
-                    pa.array(pgc_v, I64),
-                ),
-            ],
-            names=["page", "text", "counts"],
-        ),
-    )
-    counts_map = pa.MapArray.from_arrays(
-        pa.array(cntoff, I32), pa.array(cnt_k, S), pa.array(cnt_v, I64)
-    )
-    bp_map = pa.MapArray.from_arrays(
-        pa.array(bpoff, I32), pa.array(bp_k, S), pa.array(bp_v, F64)
-    )
-    pr_map = pa.MapArray.from_arrays(
-        pa.array(proff, I32), pa.array(pr_k, S), pa.array(pr_v, S)
-    )
-    lt_arr = pa.ListArray.from_arrays(pa.array(ltoff, I32), pa.array(lt, S))
-    return pa.RecordBatch.from_arrays(
-        [pa.array(doc_ids, S), pa.array(oks, pa.bool_()),
-         pa.array(rejects, S), spans_arr, pages_arr, pa.array(texts, S),
-         counts_map, pa.array(quality, F64), bp_map, pr_map, lt_arr,
-         pa.array(nw, I64), pa.array(nc, I64), pa.array(nal, I64),
-         pa.array(nnu, I64), pa.array(nan_, I64), pa.array(ap, F64),
-         pa.array(ar, F64)],
-        schema=arrow_schema,
-    )
-
-
-def _make_classify_arrow_fn(
-    cfg: ExtractConfig, row_fn=None, out_schema=None
-):
-    """mapInArrow variant of the classifier — the hot path.
-
-    Skips the Arrow↔pandas round-trip entirely: the nested spans column is
-    read with ``to_pylist()`` (one C-level pass) and results are rebuilt as
-    a RecordBatch with an explicit schema (no pandas object-column
-    inference).  Measured ~2× end-to-end extraction throughput vs
-    mapInPandas on this schema — pandas materializes every nested struct as
-    object arrays of dicts twice (in and out).
-
-    ``row_fn``/``out_schema`` select the output shape: the full
-    EXTRACTED_SCHEMA row (default) or the slim span-surface row
-    (``extract_slim``)."""
-    import pyarrow as pa
-
-    if row_fn is None:
-        row_fn = _result_row
-    if out_schema is None:
-        out_schema = EXTRACTED_SCHEMA
-
-    # the full-row surface computes D10 text metrics: batch them (one
-    # vectorized pass per Arrow batch) instead of per-doc regex work
-    batch_metrics = row_fn is _result_row
-
-    def classify_batches(batches):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(out_schema)
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            spans_col = batch.column(1)
-            results = []
-            if spans_col.null_count == 0:
-                # flat-child decode: one to_pylist per LEAF column instead
-                # of materializing a dict per span (nested to_pylist) —
-                # measured 16% faster end-to-end on the sf0.8 mix, and the
-                # classifier consumes tuples directly with no dict hop
-                offsets = spans_col.offsets.to_pylist()
-                flat = spans_col.flatten()
-                # field access is BY NAME: a conforming table whose struct
-                # children are ordered differently (read_docs normalizes,
-                # but callers can hand extract() any DataFrame) must not be
-                # silently decoded in the wrong order.
-                # kind strings repeat heavily (~6× at the corpus mix):
-                # dictionary-encode so each distinct kind materializes ONE
-                # Python string (fewer allocations, and the shared objects
-                # make the parse-cache dict lookups identity-fast).  A NULL
-                # kind (malformed producer) keeps the plain decode so it
-                # still fails per-document inside _safe_classify_tuples.
-                kind_arr = flat.field("kind")
-                if kind_arr.null_count == 0:
-                    enc = kind_arr.dictionary_encode()
-                    uniq = enc.dictionary.to_pylist()
-                    kinds = [uniq[i] for i in enc.indices.to_numpy(
-                        zero_copy_only=False).tolist()]
-                else:
-                    kinds = kind_arr.to_pylist()
-                texts = flat.field("text").to_pylist()
-                refs = flat.field("media_ref").to_pylist()
-                offs = flat.field("offset").to_pylist()
-                base = offsets[0]
-                for i, doc_id in enumerate(doc_ids):
-                    lo = offsets[i] - base
-                    hi = offsets[i + 1] - base
-                    tuples = list(
-                        zip(kinds[lo:hi], texts[lo:hi],
-                            refs[lo:hi], offs[lo:hi])
-                    )
-                    results.append(
-                        (doc_id, _safe_classify_tuples(tuples, cfg))
-                    )
-            else:  # null spans arrays: keep the error-reject semantics
-                for doc_id, spans in zip(doc_ids, spans_col.to_pylist()):
-                    results.append(
-                        (doc_id, _safe_classify_rows(spans, cfg))
-                    )
-            if not results:
-                continue
-            # column-wise Arrow assembly for the two known surfaces (byte-
-            # identical to from_pylist over the row dicts — pinned by test);
-            # any other row_fn keeps the generic row-dict path
-            if batch_metrics:
-                metrics = C.text_metrics_batch(
-                    [res.text if res.ok else "" for _, res in results]
-                )
-                yield _full_record_batch(results, metrics, arrow_schema)
-            elif row_fn is _result_row_slim:
-                yield _slim_record_batch(results, arrow_schema)
-            else:
-                rows = [row_fn(doc_id, res) for doc_id, res in results]
-                yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
-
-    return classify_batches
+def _reject(reason: str, text: str = "") -> C.DocResult:
+    return C.DocResult(False, reason, [], text, {}, 0.0, {})
 
 
 def _safe_classify_tuples(
-    tuples: list[tuple], cfg: ExtractConfig
+    tuples: list[tuple] | None, cfg: ExtractConfig
 ) -> C.DocResult:
-    """_safe_classify for pre-built (kind, text, media_ref, offset) tuples
-    (the flat-child Arrow decode path)."""
+    """Per-document fault isolation: a malformed document becomes a reject
+    row instead of failing the task (the reference's failed_*.jsonl model,
+    annotator_process.py:199-282 — at 10^12 rows one bad doc must never
+    kill a job).  ``None`` is a NULL spans array (producer wrote a null, not
+    []): a distinct marker, not error:TypeError from inside the
+    classifier."""
+    if tuples is None:
+        return _reject("null_spans")
     try:
         return C.classify_document(tuples, cfg)
     except Exception as exc:  # noqa: BLE001 — intentional isolation boundary
-        return C.DocResult(
-            False, f"error:{type(exc).__name__}", [], "", {}, 0.0, {}
-        )
+        return _reject(f"error:{type(exc).__name__}")
 
 
-def _safe_classify_rows(spans: list[dict], cfg: ExtractConfig) -> C.DocResult:
-    """_safe_classify for plain list-of-dict spans (Arrow to_pylist form)."""
-    if spans is None:
-        return C.DocResult(False, "null_spans", [], "", {}, 0.0, {})
-    try:
-        return C.classify_document(
-            [
-                (s["kind"], s["text"], s["media_ref"], s["offset"])
+# ---------------------------------------------------------------------------
+# Arrow decode / encode shared by the main and salted paths
+# ---------------------------------------------------------------------------
+
+
+def _decode_docs(batch) -> list[tuple]:
+    """``(doc_id, spans)`` per row of an Arrow batch with ``doc_id`` and
+    ``spans`` columns; spans are (kind, text, media_ref, offset) tuples, or
+    ``None`` for a NULL spans array.  Columns and struct fields are read BY
+    NAME: a conforming table whose struct children are ordered differently
+    (read_docs normalizes, but callers can hand extract() any DataFrame)
+    must not be silently decoded in the wrong order."""
+    doc_ids = batch.column("doc_id").to_pylist()
+    spans_col = batch.column("spans")
+    if spans_col.null_count:
+        # NULL spans arrays: per-row decode.  A NULL span struct stays None
+        # so it fails per-document (error:TypeError) inside the classifier
+        return [
+            (d, None if spans is None else [
+                None if s is None
+                else (s["kind"], s["text"], s["media_ref"], s["offset"])
                 for s in spans
-            ],
-            cfg,
+            ])
+            for d, spans in zip(doc_ids, spans_col.to_pylist())
+        ]
+    # flat-child decode: one to_pylist per LEAF column instead of
+    # materializing a dict per span (nested to_pylist) — measured 16%
+    # faster end-to-end on the sf0.8 mix, and the classifier consumes
+    # tuples directly with no dict hop
+    offsets = spans_col.offsets.to_pylist()
+    flat = spans_col.flatten()
+    # kind strings repeat heavily (~6× at the corpus mix): dictionary-encode
+    # so each distinct kind materializes ONE Python string (fewer
+    # allocations, and the shared objects make the parse-cache dict lookups
+    # identity-fast).  A NULL kind (malformed producer) keeps the plain
+    # decode so it still fails per-document inside the classifier.
+    kind_arr = flat.field("kind")
+    if kind_arr.null_count == 0:
+        enc = kind_arr.dictionary_encode()
+        uniq = enc.dictionary.to_pylist()
+        kinds = [
+            uniq[i]
+            for i in enc.indices.to_numpy(zero_copy_only=False).tolist()
+        ]
+    else:
+        kinds = kind_arr.to_pylist()
+    texts = flat.field("text").to_pylist()
+    refs = flat.field("media_ref").to_pylist()
+    offs = flat.field("offset").to_pylist()
+    base = offsets[0]
+    out = []
+    for i, doc_id in enumerate(doc_ids):
+        lo = offsets[i] - base
+        hi = offsets[i + 1] - base
+        out.append(
+            (doc_id,
+             list(zip(kinds[lo:hi], texts[lo:hi], refs[lo:hi], offs[lo:hi])))
         )
-    except Exception as exc:  # noqa: BLE001 — intentional isolation boundary
-        return C.DocResult(
-            False, f"error:{type(exc).__name__}", [], "", {}, 0.0, {}
-        )
+    return out
+
+
+def _span_array(span_lists, page_lists=None) -> pa.ListArray:
+    """``list<struct<kind,text,media_ref,offset[,page]>>`` built column-wise
+    from per-row span tuples (and, for classified spans, per-row span
+    pages) — no dict per span, one C-level array build per leaf."""
+    cols: tuple[list, ...] = ([], [], [], [])
+    pages: list = []
+    offsets = [0]
+    for i, spans in enumerate(span_lists):
+        if spans:
+            for col, vals in zip(cols, zip(*spans)):
+                col.extend(vals)
+            if page_lists is not None:
+                pages.extend(page_lists[i])
+        offsets.append(len(cols[0]))
+    S = pa.string()
+    I32 = pa.int32()
+    children = [pa.array(cols[0], S), pa.array(cols[1], S),
+                pa.array(cols[2], S), pa.array(cols[3], I32)]
+    names = ["kind", "text", "media_ref", "offset"]
+    if page_lists is not None:
+        children.append(pa.array(pages, I32))
+        names.append("page")
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, I32),
+        pa.StructArray.from_arrays(children, names=names),
+    )
+
+
+def _out_span_array(docs: list[C.DocResult]) -> pa.ListArray:
+    return _span_array(
+        [r.spans for r in docs],
+        [
+            r.span_pages
+            if len(r.span_pages) == len(r.spans)
+            else [1] * len(r.spans)
+            for r in docs
+        ],
+    )
+
+
+def _typed_batch(columns: list, arrow_schema: pa.Schema) -> pa.RecordBatch:
+    """A RecordBatch of ``arrow_schema`` from one entry per field: a built
+    Arrow array, or a Python list converted with the field's type (structs
+    from tuples, maps from dicts in insertion order)."""
+    return pa.RecordBatch.from_arrays(
+        [
+            c if isinstance(c, pa.Array) else pa.array(c, f.type)
+            for c, f in zip(columns, arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+
+
+def _slim_columns(results) -> list:
+    docs = [r for _, r in results]
+    return [
+        [d for d, _ in results],
+        [r.ok for r in docs],
+        [r.reject_reason for r in docs],
+        _out_span_array(docs),
+    ]
+
+
+def _slim_record_batch(results, arrow_schema):
+    """EXTRACTED_SLIM_SCHEMA rows from (doc_id, DocResult) pairs."""
+    return _typed_batch(_slim_columns(results), arrow_schema)
+
+
+def _full_record_batch(results, metrics, arrow_schema):
+    """EXTRACTED_SCHEMA rows from (doc_id, DocResult) pairs and their D10
+    text metrics."""
+    docs = [r for _, r in results]
+    return _typed_batch(
+        _slim_columns(results)
+        + [
+            [r.pages for r in docs],
+            [r.text for r in docs],
+            [r.counts for r in docs],
+            [float(r.quality) for r in docs],
+            [r.builtin_props for r in docs],
+            [r.props for r in docs],
+            [r.lang_tags for r in docs],
+        ]
+        + [[int(m[k]) for m in metrics] for k in _INT_METRICS]
+        + [[float(m[k]) for m in metrics] for k in _FLOAT_METRICS],
+        arrow_schema,
+    )
+
+
+def _record_batch(results, slim: bool, arrow_schema):
+    """The output batch of either surface.  D10 metrics are computed here,
+    inside the classification UDF: they parallelize with classification at
+    zero extra Arrow traffic, in one vectorized pass per batch.  (A native
+    column-expression variant was measured slower end-to-end — JVM string
+    passes over multi-MB mega-doc texts straggle; see operators/text.py
+    metrics_exprs for the SQL-side twin used by the oracle.)"""
+    if slim:
+        return _slim_record_batch(results, arrow_schema)
+    metrics = C.text_metrics_batch(
+        [res.text if res.ok else "" for _, res in results]
+    )
+    return _full_record_batch(results, metrics, arrow_schema)
+
+
+def _out_schema(slim: bool) -> StructType:
+    return EXTRACTED_SLIM_SCHEMA if slim else EXTRACTED_SCHEMA
+
+
+def _make_classify_arrow_fn(cfg: ExtractConfig, slim: bool = False):
+    """mapInArrow classifier — the hot path.
+
+    Skips the Arrow↔pandas round-trip entirely: spans are decoded leaf by
+    leaf and results are rebuilt as a RecordBatch with an explicit schema
+    (no pandas object-column inference).  Measured ~2× end-to-end
+    extraction throughput vs mapInPandas on this schema — pandas
+    materializes every nested struct as object arrays of dicts twice (in and
+    out).  ``slim`` selects the span-surface row (``extract_slim``)."""
+    arrow_schema = to_arrow_schema(_out_schema(slim))
+
+    def classify_batches(batches):
+        for batch in batches:
+            results = [
+                (doc_id, _safe_classify_tuples(tuples, cfg))
+                for doc_id, tuples in _decode_docs(batch)
+            ]
+            if results:
+                yield _record_batch(results, slim, arrow_schema)
+
+    return classify_batches
 
 
 # ---------------------------------------------------------------------------
@@ -618,258 +432,259 @@ def _chunk_spans(spans: list[tuple], target: int) -> list[list[tuple]]:
     return chunks
 
 
-def _font_state_of(elements: list, cfg: ExtractConfig) -> str:
+def _font_state(chunks: list[list[tuple]], cfg: ExtractConfig) -> dict:
+    """The document's font-heuristic accumulation state, paragraphs taken
+    in chunk order — equal to per-chunk states merged in chunk order, since
+    the state is additive per paragraph."""
     h = C.FontHeuristics(cfg)
-    for el in elements:
-        if isinstance(el, C.BodyPar):
-            h._evaluate_paragraph(el)
-    return json.dumps(
-        {
-            "counts": h.font_size_count,
-            "apps": h.font_size_appearances,
-            "tracker": h.builtin_heading_tracker,
-        }
-    )
+    for chunk in chunks:
+        for el in C.parse_elements(chunk):
+            if isinstance(el, C.BodyPar):
+                h._evaluate_paragraph(el)
+    return {
+        "counts": h.font_size_count,
+        "apps": h.font_size_appearances,
+        "tracker": h.builtin_heading_tracker,
+    }
 
 
 def _make_chunk_fn(cfg: ExtractConfig):
-    def chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                if len(spans) > cfg.max_doc_spans:
-                    # oversized-doc gate (B1/C1 analog): reject without
-                    # classifying — marker chunk, resolved at merge
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "chunk_idx": -1,
-                            "spans": [],
-                            "font_state": "REJ:too_many_spans",
-                        }
-                    )
-                    continue
-                try:
-                    tuples = _spans_to_tuples(spans)
-                    doc_rows = []
-                    for idx, chunk in enumerate(
-                        _chunk_spans(tuples, cfg.salt_chunk_spans)
-                    ):
-                        elements = C.parse_elements(chunk)
-                        doc_rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "chunk_idx": idx,
-                                "spans": _spans_to_rows(chunk),
-                                "font_state": _font_state_of(elements, cfg),
-                            }
-                        )
-                    rows.extend(doc_rows)
-                except Exception as exc:  # noqa: BLE001 — fault isolation
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "chunk_idx": -1,
-                            "spans": [],
-                            "font_state": f"ERR:{type(exc).__name__}",
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
+    """Stage 1 (mapInArrow): one task sees each whole mega-doc, so it
+    chunks the doc and computes its font state in place; a rejected doc is
+    one chunk row carrying the reject reason."""
+    arrow_schema = to_arrow_schema(_CHUNK_SCHEMA)
+
+    def chunk_batches(batches):
+        for batch in batches:
+            ids, idxs, reasons, chunk_spans, states = [], [], [], [], []
+            for doc_id, tuples in _decode_docs(batch):
+                reason = state = None
+                chunks: list[list[tuple]] = [[]]
+                if tuples is None:
+                    reason = "null_spans"
+                elif len(tuples) > cfg.max_doc_spans:
+                    # oversized-doc gate (B1/C1 analog): reject unclassified
+                    reason = "too_many_spans"
+                else:
+                    try:
+                        chunks = _chunk_spans(tuples, cfg.salt_chunk_spans)
+                        state = _font_state(chunks, cfg)
+                    except Exception as exc:  # noqa: BLE001 — fault isolation
+                        reason = f"error:{type(exc).__name__}"
+                        chunks = [[]]
+                for idx, chunk in enumerate(chunks):
+                    ids.append(doc_id)
+                    idxs.append(idx)
+                    reasons.append(reason)
+                    chunk_spans.append(chunk)
+                    states.append(state)
+            if ids:
+                yield _typed_batch(
+                    [ids, idxs, reasons, _span_array(chunk_spans), states],
+                    arrow_schema,
+                )
 
     return chunk_batches
 
 
-def _merge_font_states(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("chunk_idx")  # insertion order must match 1-pass
-    counts: dict[str, int] = {}
-    apps: dict[str, int] = {}
-    tracker: list = []
-    for state_json in pdf["font_state"]:
-        if state_json.startswith(("ERR:", "REJ:")):
-            return pd.DataFrame(
-                [{"doc_id": key[0], "font_state": state_json}]
-            )
-        st = json.loads(state_json)
-        for k, v in st["counts"].items():
-            counts[k] = counts.get(k, 0) + v
-        for k, v in st["apps"].items():
-            apps[k] = apps.get(k, 0) + v
-        tracker.extend(st["tracker"])
-    merged = json.dumps({"counts": counts, "apps": apps, "tracker": tracker})
-    return pd.DataFrame([{"doc_id": key[0], "font_state": merged}])
-
-
-def _heuristics_from_state(state_json: str, cfg: ExtractConfig) -> C.FontHeuristics:
-    st = json.loads(state_json)
+def _heuristics_from_state(state: dict, cfg: ExtractConfig) -> C.FontHeuristics:
     h = C.FontHeuristics(cfg)
-    h.merge_state(st["counts"], st["apps"], [tuple(t) for t in st["tracker"]])
+    h.merge_state(
+        dict(state["counts"]),
+        dict(state["apps"]),
+        [(t["fp"], t["level"]) for t in state["tracker"]],
+    )
     h.build()
     return h
 
 
-def _make_chunk_classify_fn(cfg: ExtractConfig):
-    def classify_chunks(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        from collections import OrderedDict
+def _classify_chunk(
+    tuples: list[tuple], h: C.FontHeuristics
+) -> tuple[C.DocResult, dict[int, list[float]]]:
+    """One chunk classified with its document's font map: a partial
+    DocResult (chunk-local offsets and pages, no quality) and the chunk's
+    char counter, which the merge sums before scoring quality."""
+    elements = C.parse_elements(tuples)
+    out_spans, counter, counts, span_pages, pages = C.classify_elements(
+        elements, h
+    )
+    props, lang_tags = C.element_meta(elements)
+    part = C.DocResult(
+        True, None,
+        [(k, t, m, i) for i, (k, t, m) in enumerate(out_spans)],
+        C.serialize_text(elements), counts, 0.0, {},
+        span_pages=span_pages, pages=pages, props=props, lang_tags=lang_tags,
+    )
+    return part, counter
 
+
+def _make_chunk_classify_fn(cfg: ExtractConfig):
+    """Stage 2 (mapInArrow, after the salt shuffle): classify each chunk
+    with its document's font map; reject rows pass through."""
+    arrow_schema = to_arrow_schema(_PARTIAL_SCHEMA)
+
+    def classify_chunks(batches):
         # bounded per-task LRU: evict one entry at a time so a task
         # interleaving chunks of >64 mega-docs re-derives only the coldest
         # heuristics map, not all of them
-        heuristics_cache: OrderedDict[str, C.FontHeuristics] = OrderedDict()
-        for pdf in batches:
-            rows = []
-            for doc_id, chunk_idx, spans, state in zip(
-                pdf["doc_id"], pdf["chunk_idx"], pdf["spans"], pdf["doc_font_state"]
+        cache: OrderedDict[str, C.FontHeuristics] = OrderedDict()
+
+        def heuristics(doc_id, state) -> C.FontHeuristics:
+            h = cache.get(doc_id)
+            if h is None:
+                h = cache[doc_id] = _heuristics_from_state(state.as_py(), cfg)
+                if len(cache) > 64:
+                    cache.popitem(last=False)
+            else:
+                cache.move_to_end(doc_id)
+            return h
+
+        for batch in batches:
+            docs = _decode_docs(batch)
+            parts = []
+            counters = []
+            for (doc_id, tuples), reason, state in zip(
+                docs,
+                batch.column("reject_reason").to_pylist(),
+                batch.column("font_state"),
             ):
-                try:
-                    if state.startswith(("ERR:", "REJ:")) or chunk_idx < 0:
-                        raise _ChunkError(state)
-                    h = heuristics_cache.get(doc_id)
-                    if h is None:
-                        h = _heuristics_from_state(state, cfg)
-                        heuristics_cache[doc_id] = h
-                        if len(heuristics_cache) > 64:
-                            heuristics_cache.popitem(last=False)
-                    else:
-                        heuristics_cache.move_to_end(doc_id)
-                    elements = C.parse_elements(_spans_to_tuples(spans))
-                    out_spans, char_counter, counts, span_pages, pages = (
-                        C.classify_elements(elements, h)
-                    )
-                except Exception as exc:  # noqa: BLE001 — fault isolation
-                    marker = (
-                        state if state.startswith(("ERR:", "REJ:"))
-                        else f"ERR:{type(exc).__name__}"
-                    )
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "chunk_idx": int(chunk_idx),
-                            "spans": [],
-                            "pages": [],
-                            "text": "",
-                            "counts": {},
-                            "char_counter": marker,
-                            "meta_json": "{}",
-                        }
-                    )
-                    continue
-                props: dict[str, str] = {}
-                lang_tags: list[str] = []
-                for el in elements:
-                    if isinstance(el, C.Meta):
-                        if el.key == "lang_tag":
-                            lang_tags.append(el.value)
-                        elif el.key:
-                            props[el.key] = el.value
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "chunk_idx": int(chunk_idx),
-                        "spans": [
-                            {"kind": k, "text": t, "media_ref": m,
-                             "offset": i, "page": p}
-                            for i, ((k, t, m), p) in enumerate(
-                                zip(out_spans, span_pages)
-                            )
-                        ],
-                        "pages": _pages_to_rows(pages),
-                        "text": C.serialize_text(elements),
-                        "counts": {k: int(v) for k, v in counts.items()},
-                        "char_counter": json.dumps(char_counter),
-                        "meta_json": json.dumps(
-                            {"props": props, "lang_tags": lang_tags}
-                        ),
-                    }
+                if reason is not None:
+                    part, counter = _reject(reason), {}
+                else:
+                    try:
+                        part, counter = _classify_chunk(
+                            tuples, heuristics(doc_id, state)
+                        )
+                    except Exception as exc:  # noqa: BLE001 — fault isolation
+                        part = _reject(f"error:{type(exc).__name__}")
+                        counter = {}
+                parts.append(part)
+                counters.append(counter)
+            if parts:
+                yield _typed_batch(
+                    [
+                        [doc_id for doc_id, _ in docs],
+                        batch.column("chunk_idx").to_pylist(),
+                        [r.reject_reason for r in parts],
+                        _out_span_array(parts),
+                        [r.pages for r in parts],
+                        [r.text for r in parts],
+                        [r.counts for r in parts],
+                        counters,
+                        [r.props for r in parts],
+                        [r.lang_tags for r in parts],
+                    ],
+                    arrow_schema,
                 )
-            if rows:
-                yield pd.DataFrame(rows)
 
     return classify_chunks
 
 
-class _ChunkError(Exception):
-    pass
+def _merge_partials(table: pa.Table, cfg: ExtractConfig) -> C.DocResult:
+    """One document's DocResult from its classified chunks in chunk order:
+    the first chunk reject wins, then the min-text gate on the joined text,
+    then spans, pages and counters are concatenated/summed."""
+    reasons = [
+        r for r in table.column("reject_reason").to_pylist() if r is not None
+    ]
+    if reasons:
+        return _reject(reasons[0])
+    text = "\n".join(t for t in table.column("text").to_pylist() if t)
+    if len(text) < cfg.min_text_chars:
+        return _reject("min_text", text)
+    spans_col = table.column("spans").combine_chunks()
+    flat = spans_col.flatten()
+    kinds, texts, refs, local_pages = (
+        flat.field(f).to_pylist() for f in ("kind", "text", "media_ref", "page")
+    )
+    offsets = spans_col.offsets.to_pylist()
+    base = offsets[0]
+    span_pages: list[int] = []
+    # page renumbering: chunk-local pages are 1-based; chunk i's page 1
+    # continues the last page of chunk i-1 (a chunk boundary is never a
+    # page break), so the running offset grows by (chunk_pages - 1)
+    page_offset = 0
+    merged_pages: dict[int, tuple[list[str], dict[str, int]]] = {}
+    for i, chunk_pages in enumerate(table.column("pages").to_pylist()):
+        lo = offsets[i] - base
+        hi = offsets[i + 1] - base
+        span_pages.extend(p + page_offset for p in local_pages[lo:hi])
+        for p in chunk_pages:
+            rec = merged_pages.setdefault(p["page"] + page_offset, ([], {}))
+            if p["text"]:
+                rec[0].append(p["text"])
+            for k, v in p["counts"]:
+                rec[1][k] = rec[1].get(k, 0) + v
+        page_offset += max(len(chunk_pages) - 1, 0)
+    counts: dict[str, int] = {}
+    for chunk_counts in table.column("counts").to_pylist():
+        for k, v in chunk_counts:
+            counts[k] = counts.get(k, 0) + v
+    counter: dict[int, list[float]] = {}
+    for chunk_counter in table.column("char_counter").to_pylist():
+        for ent_id, (b, h) in chunk_counter:
+            slot = counter.setdefault(ent_id, [0.0, 0.0])
+            slot[0] += b
+            slot[1] += h
+    props: dict[str, str] = {}
+    lang_tags: set[str] = set()
+    for chunk_props, chunk_tags in zip(
+        table.column("props").to_pylist(), table.column("lang_tags").to_pylist()
+    ):
+        props.update(chunk_props)
+        lang_tags.update(chunk_tags)
+    quality, builtin_props = C.quality_from_counter(counter, counts)
+    return C.DocResult(
+        True,
+        None,
+        [(k, t, m, i) for i, (k, t, m) in enumerate(zip(kinds, texts, refs))],
+        text,
+        counts,
+        quality,
+        builtin_props,
+        span_pages=span_pages,
+        pages=[
+            (p, "\n".join(parts), pc)
+            for p, (parts, pc) in sorted(merged_pages.items())
+        ],
+        props=props,
+        lang_tags=sorted(lang_tags),
+    )
 
 
-def _make_merge_partials_fn(cfg: ExtractConfig, row_fn=_result_row):
-    """``row_fn`` picks the output surface: ``_result_row`` (full
-    EXTRACTED_SCHEMA) or ``_result_row_slim`` (span surface only) — the
-    merge logic is identical, only the returned row (and therefore the
-    Arrow return-leg volume) differs."""
+def _make_merge_fn(cfg: ExtractConfig, slim: bool):
+    """Stage 3 (grouped applyInArrow by doc_id): one output row per
+    mega-doc, built by the main path's batch builders."""
+    arrow_schema = to_arrow_schema(_out_schema(slim))
 
-    def merge_partials(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("chunk_idx")
-        for marker in pdf["char_counter"]:
-            if marker.startswith("ERR:"):
-                res = C.DocResult(
-                    False, f"error:{marker[4:]}", [], "", {}, 0.0, {}
-                )
-                return pd.DataFrame([row_fn(key[0], res)])
-            if marker.startswith("REJ:"):
-                res = C.DocResult(False, marker[4:], [], "", {}, 0.0, {})
-                return pd.DataFrame([row_fn(key[0], res)])
-        text = "\n".join(t for t in pdf["text"] if len(t) > 0)
-        if len(text) < cfg.min_text_chars:
-            res = C.DocResult(False, "min_text", [], text, {}, 0.0, {})
-            return pd.DataFrame([row_fn(key[0], res)])
-        spans: list[tuple] = []
-        span_pages: list[int] = []
-        counts: dict[str, int] = {}
-        counter: dict[int, list[float]] = {}
-        # page renumbering: chunk-local pages are 1-based; chunk i's page 1
-        # continues the last page of chunk i-1 (a chunk boundary is never a
-        # page break), so the running offset grows by (chunk_pages - 1)
-        page_offset = 0
-        merged_pages: dict[int, tuple[list[str], dict[str, int]]] = {}
-        doc_props: dict[str, str] = {}
-        lang_tags: set[str] = set()
-        for chunk_spans, chunk_pages, chunk_counts, counter_json, meta_json in zip(
-            pdf["spans"], pdf["pages"], pdf["counts"],
-            pdf["char_counter"], pdf["meta_json"],
-        ):
-            for s in chunk_spans:
-                spans.append((s["kind"], s["text"], s["media_ref"]))
-                span_pages.append(int(s["page"]) + page_offset)
-            for p in chunk_pages:
-                g = int(p["page"]) + page_offset
-                rec = merged_pages.setdefault(g, ([], {}))
-                if p["text"]:
-                    rec[0].append(p["text"])
-                for k, v in (p["counts"] or {}).items():
-                    rec[1][k] = rec[1].get(k, 0) + int(v)
-            page_offset += max(len(chunk_pages) - 1, 0)
-            for k, v in chunk_counts.items():
-                counts[k] = counts.get(k, 0) + int(v)
-            for ent_id, (b, h) in json.loads(counter_json).items():
-                slot = counter.setdefault(int(ent_id), [0.0, 0.0])
-                slot[0] += b
-                slot[1] += h
-            meta = json.loads(meta_json)
-            doc_props.update(meta.get("props", {}))
-            lang_tags.update(meta.get("lang_tags", []))
-        quality, builtin_props = C.quality_from_counter(counter, counts)
-        res = C.DocResult(
-            True,
-            None,
-            [(k, t, m, i) for i, (k, t, m) in enumerate(spans)],
-            text,
-            counts,
-            quality,
-            builtin_props,
-            span_pages=span_pages,
-            pages=[
-                (p, "\n".join(parts), pc)
-                for p, (parts, pc) in sorted(merged_pages.items())
-            ],
-            props=doc_props,
-            lang_tags=sorted(lang_tags),
+    def merge(table):
+        table = table.sort_by("chunk_idx")
+        doc_id = table.column("doc_id")[0].as_py()
+        res = _merge_partials(table, cfg)
+        return pa.Table.from_batches(
+            [_record_batch([(doc_id, res)], slim, arrow_schema)]
         )
-        return pd.DataFrame([row_fn(key[0], res)])
 
-    return merge_partials
+    return merge
+
+
+def _extract_salted(
+    big: DataFrame, cfg: ExtractConfig, slim: bool
+) -> DataFrame:
+    """The salted mega-doc path: chunk → salt shuffle → classify → merge.
+    The shuffles carry mega-doc rows only (few), and every stage has a
+    single consumer, so nothing is cached or recomputed.  ``slim`` picks the
+    output surface at the merge, so slim consumers never pay the fat Arrow
+    return leg even for mega-docs."""
+    return (
+        big.select("doc_id", "spans")
+        .mapInArrow(_make_chunk_fn(cfg), schema=_CHUNK_SCHEMA)
+        # spread one doc's chunks across the cluster — this IS the salt
+        .repartition("doc_id", "chunk_idx")
+        .mapInArrow(_make_chunk_classify_fn(cfg), schema=_PARTIAL_SCHEMA)
+        .groupBy("doc_id")
+        .applyInArrow(_make_merge_fn(cfg, slim), schema=_out_schema(slim))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -877,34 +692,8 @@ def _make_merge_partials_fn(cfg: ExtractConfig, row_fn=_result_row):
 # ---------------------------------------------------------------------------
 
 
-def ensure_parallelism(
-    df: DataFrame, min_partitions: int | None = None
-) -> DataFrame:
-    """Guarantee the downstream Python stage is parallel — without touching
-    ``df.rdd`` (converting the plan to an RDD just to read a partition count
-    forces a full plan-to-RDD translation per call).
-
-    File scans — the only input kind that exists at 100 TB — are already
-    split by the session confs (``spark.sql.files.minPartitionNum`` ≥ cores,
-    ``maxPartitionBytes``), and AQE coalesces over-splitting at runtime, so
-    no dynamic check is needed: this is a no-op.  For non-file inputs
-    (in-memory test frames, post-aggregation locals) pass ``min_partitions``
-    to force an explicit round-robin repartition."""
-    if min_partitions is not None:
-        return df.repartition(min_partitions)
-    return df
-
-
-def extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Classify every document; returns the EXTRACTED_SCHEMA DataFrame.
-
-    ``docs`` must have (doc_id string, spans array<struct<kind,text,
-    media_ref,offset>>).
-    """
+def _extract(docs: DataFrame, cfg: ExtractConfig, slim: bool) -> DataFrame:
     # Exactly TWO scans of the input: the small path and the salted path.
-    # The oversized-document gate (too_many_spans, no Python classification)
-    # is folded into the chunk UDF as a reject marker so it does not cost a
-    # third scan.
     #
     # The split predicate prefers the MAINTAINED ``n_spans`` column (the
     # Iceberg-size-metadata analog, written by the table producer): a plain
@@ -914,74 +703,38 @@ def extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     # the whole multi-GB spans column a second time (evidence:
     # BENCH/PRUNING.md).  Tables without the column fall back to
     # ``size(spans)``, which both branches must compute post-scan.
+    #
+    # A NULL n_spans (imperfect producer metadata) or NULL spans array
+    # (size(NULL) is NULL, not -1, since Spark 3.0) satisfies neither size
+    # predicate: route it down the small path so no row is silently
+    # dropped (the kernel rejects a NULL spans array per-doc); IsNotNull on
+    # the big branch still pushes down.
     if "n_spans" in docs.columns:
-        # NULL n_spans (imperfect producer metadata) satisfies neither
-        # predicate — route NULLs down the small path so no row is silently
-        # dropped; IsNotNull on the big branch still pushes down.
         n_spans = F.col("n_spans")
-        small = docs.filter(
-            (n_spans <= F.lit(cfg.salt_threshold)) | n_spans.isNull()
-        )
-        big = docs.filter(n_spans > F.lit(cfg.salt_threshold))
+        unknown = n_spans.isNull()
     else:
-        # size(NULL) is NULL (not -1) since Spark 3.0: a NULL spans array
-        # would satisfy neither predicate and vanish — route it small,
-        # like the maintained-column branch (kernel rejects it per-doc)
         n_spans = F.size("spans")
-        small = docs.filter(
-            (n_spans <= F.lit(cfg.salt_threshold)) | F.col("spans").isNull()
-        )
-        big = docs.filter(n_spans > F.lit(cfg.salt_threshold))
+        unknown = F.col("spans").isNull()
+    small = docs.filter((n_spans <= F.lit(cfg.salt_threshold)) | unknown)
+    big = docs.filter(n_spans > F.lit(cfg.salt_threshold))
 
     # (A heavy-first two-branch scan — union the >8k-span docs first so
     # their tasks start in wave 1 — was A/B-measured at pinned 16 cores and
     # showed no gain over the plain scan: 256 splits / 16 waves already
     # absorb the ~110k-span stragglers.  Kept out to avoid an extra scan.)
-    small_out = ensure_parallelism(small.select("doc_id", "spans")).mapInArrow(
-        _make_classify_arrow_fn(cfg), schema=EXTRACTED_SCHEMA
+    small_out = small.select("doc_id", "spans").mapInArrow(
+        _make_classify_arrow_fn(cfg, slim), schema=_out_schema(slim)
     )
-
-    big_out = _extract_salted(big, cfg)
-
-    return small_out.unionByName(big_out)
+    return small_out.unionByName(_extract_salted(big, cfg, slim))
 
 
-def _extract_salted(
-    big: DataFrame,
-    cfg: ExtractConfig,
-    row_fn=_result_row,
-    out_schema: StructType = EXTRACTED_SCHEMA,
-) -> DataFrame:
-    """The salted mega-doc path: chunk → merge font state → broadcast join
-    → classify → merge partials.  The groupBy keys are mega-doc ids only
-    (few), so the shuffles here touch a tiny fraction of the data.  The
-    chunk stage is persisted: it feeds both the font-state merge and the
-    classify join, and would otherwise be recomputed per consumer.
+def extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Classify every document; returns the EXTRACTED_SCHEMA DataFrame.
 
-    ``row_fn``/``out_schema`` choose the output surface (full vs slim) at
-    the final merge, so slim consumers never pay the fat Arrow return leg
-    even for mega-docs."""
-    chunks = (
-        ensure_parallelism(big.select("doc_id", "spans"))
-        .mapInPandas(_make_chunk_fn(cfg), schema=_CHUNK_SCHEMA)
-        # spread one doc's chunks across the cluster — this IS the salt
-        .repartition("doc_id", "chunk_idx")
-        .persist()
-    )
-    font_maps = (
-        chunks.select("doc_id", "chunk_idx", "font_state")
-        .groupBy("doc_id")
-        .applyInPandas(_merge_font_states, schema=_FONTMAP_SCHEMA)
-        .withColumnRenamed("font_state", "doc_font_state")
-    )
-    classified = (
-        chunks.drop("font_state")
-        .join(F.broadcast(font_maps), "doc_id")
-        .mapInPandas(_make_chunk_classify_fn(cfg), schema=_PARTIAL_SCHEMA)
-    )
-    return classified.groupBy("doc_id").applyInPandas(
-        _make_merge_partials_fn(cfg, row_fn), schema=out_schema
-    )
+    ``docs`` must have (doc_id string, spans array<struct<kind,text,
+    media_ref,offset>>).
+    """
+    return _extract(docs, cfg, slim=False)
 
 
 def extract_slim(
@@ -992,35 +745,9 @@ def extract_slim(
     without the metadata columns.  Catalyst cannot prune columns through an
     opaque mapInArrow, so a caller that wants only spans must choose the
     slim function, not project afterward.  Same classifier, same salted
-    mega-doc handling — the salted branch shares the full path's
-    chunk/classify/merge pipeline but emits slim rows at the final merge,
-    so mega-doc-heavy tables skip the fat return leg too."""
-    if "n_spans" in docs.columns:
-        n_spans = F.col("n_spans")
-        small = docs.filter(
-            (n_spans <= F.lit(cfg.salt_threshold)) | n_spans.isNull()
-        )
-        big = docs.filter(n_spans > F.lit(cfg.salt_threshold))
-    else:
-        # size(NULL) is NULL (not -1) since Spark 3.0: a NULL spans array
-        # would satisfy neither predicate and vanish — route it small,
-        # like the maintained-column branch (kernel rejects it per-doc)
-        n_spans = F.size("spans")
-        small = docs.filter(
-            (n_spans <= F.lit(cfg.salt_threshold)) | F.col("spans").isNull()
-        )
-        big = docs.filter(n_spans > F.lit(cfg.salt_threshold))
-
-    small_out = ensure_parallelism(small.select("doc_id", "spans")).mapInArrow(
-        _make_classify_arrow_fn(
-            cfg, row_fn=_result_row_slim, out_schema=EXTRACTED_SLIM_SCHEMA
-        ),
-        schema=EXTRACTED_SLIM_SCHEMA,
-    )
-    big_out = _extract_salted(
-        big, cfg, row_fn=_result_row_slim, out_schema=EXTRACTED_SLIM_SCHEMA
-    )
-    return small_out.unionByName(big_out)
+    mega-doc handling — the salted branch emits slim rows at its merge, so
+    mega-doc-heavy tables skip the fat return leg too."""
+    return _extract(docs, cfg, slim=True)
 
 
 def spans_out(extracted: DataFrame) -> DataFrame:
