@@ -1,4 +1,5 @@
 import pyspark.sql.functions as F
+import pytest
 
 from wordscape_spark.operators import dedup as D
 
@@ -16,6 +17,19 @@ def test_connected_components(spark):
     assert labels == {"a": "a", "b": "a", "c": "a", "d": "a",
                       "x": "x", "y": "x"}
 
+
+
+def test_connected_components_budget_and_empty(spark):
+    # a 4-node chain needs more than two propagation rounds: the budget
+    # is enforced rather than split clusters returned
+    chain = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d")], "doc_a string, doc_b string"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        D.duplicate_clusters(chain, max_iterations=2)
+    # no pairs: the single observed round on empty input still reports
+    empty = spark.createDataFrame([], "doc_a string, doc_b string")
+    assert D.duplicate_clusters(empty).collect() == []
 
 def test_keep_representatives(spark):
     docs = spark.createDataFrame(
@@ -72,6 +86,30 @@ def test_end_to_end_minhash_clustering(spark):
         orig, copy = str(r["doc_id"]), str(r["doc_id"] + 1000)
         assert not (orig in kept_ids and copy in kept_ids)
 
+
+
+def test_minhash_pairs_single_signature_pass(spark):
+    """Near-dedup pins no cache: the band self-join's two sides share one
+    exchange, so the signature expressions run once per document, and
+    no persisted frame is left behind by the call."""
+    rows = [
+        (f"d{i:02d}", " ".join(f"w{i}x{j}" for j in range(30)))
+        for i in range(12)
+    ]
+    rows += [(f"c{i:02d}", text) for i, (_, text) in enumerate(rows[:4])]
+    corpus = spark.createDataFrame(rows, "doc_id string, text string")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+
+    pairs = D.minhash_duplicate_pairs(corpus, threshold=0.8)
+    got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
+
+    assert got == {(f"c{i:02d}", f"d{i:02d}") for i in range(4)}
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    final = plan[plan.index("== Final Plan =="):plan.index("== Initial Plan ==")]
+    assert final.count("array_min(") == D.MINHASH_K, final
+    assert "InMemoryTableScan" not in final, final
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
 
 def test_shingles_tokenizer_bound_once(spark):
     """The shingle transform must bind the token array once: CollapseProject

@@ -12,16 +12,17 @@ Determinism & oracle parity: every hash is md5-derived
 Scale notes (100 TB):
 * signatures are computed per-row with array expressions (no explode) — one
   narrow map stage, whole-stage codegen;
-* the LSH band join shuffles only (band_key, doc_id) pairs — band keys are
-  md5 strings, well distributed, AQE handles residual skew;
-* candidate verification joins shingle sets only for candidate pairs (a tiny
-  fraction), never all-pairs.
+* LSH candidates come from a shuffle-merge band self-join: one exchange of
+  (band_key, doc_id) pairs feeds both sides — band keys are md5 strings,
+  well distributed, AQE handles residual skew;
+* candidate verification joins the candidate pairs to every document's
+  shingle set by doc_id (no prefilter), never all-pairs.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 MINHASH_K = 16
 LSH_BANDS = 4  # 4 bands × 4 rows
@@ -74,9 +75,10 @@ def minhash_exprs(
 ) -> list[str]:
     """k minhash values over a `sh` (shingles array) column.
 
-    ``fast=True`` (engine default at scale) uses xxhash64 — one 64-bit hash
-    per (i, shingle), no string md5/hex math (~10× cheaper).  The md5 variant
-    exists because the DuckDB oracle can reproduce it bit-for-bit.
+    ``fast=True`` (opt-in; the default is the md5 variant) uses xxhash64 —
+    one 64-bit hash per (i, shingle), no string md5/hex math (~10×
+    cheaper).  The md5 variant is the default because the DuckDB oracle
+    can reproduce it bit-for-bit.
     """
     out = []
     for i in range(k):
@@ -129,18 +131,15 @@ def minhash_duplicate_pairs(
     """Near-duplicate pairs: LSH candidate generation + exact-Jaccard verify.
 
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard ≥ threshold.
-    The signature stage is persisted: it feeds both the band join and the
-    verification join, and Catalyst's project-collapse would otherwise
-    recompute the (expensive) signature expressions per consumer.
+    No cache: the band self-join is hinted ``shuffle_merge`` so both of its
+    sides read one reused exchange (a broadcast side would evaluate the
+    signature expressions a second time), and the verify joins read
+    ``(doc_id, sh)``, which column pruning reduces to shingling alone.
     """
     sigs = with_minhash(
         df.select(F.col(id_col).cast("string").alias("doc_id"), text_col),
         fast=fast,
-    ).select(
-        "doc_id", "sh", *[f"band{b}" for b in range(LSH_BANDS)]
     )
-    sigs = sigs.persist()
-
     bands = sigs.select(
         "doc_id",
         F.explode(
@@ -151,11 +150,10 @@ def minhash_duplicate_pairs(
         ).alias("bk"),
     ).select("doc_id", "bk.band_id", "bk.key")
 
-    left = bands.alias("a")
-    right = bands.alias("b")
     candidates = (
-        left.join(
-            right,
+        bands.alias("a")
+        .join(
+            bands.hint("shuffle_merge").alias("b"),
             (F.col("a.band_id") == F.col("b.band_id"))
             & (F.col("a.key") == F.col("b.key"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
@@ -166,20 +164,7 @@ def minhash_duplicate_pairs(
         .distinct()
     )
 
-    # verification needs shingle arrays only for docs that appear in a
-    # candidate pair — a tiny fraction of the corpus.  Pre-filter the
-    # (heavy) shingle table with a broadcast semi-join on those ids
-    # (guide-standard Bloom/semi-join pre-filter) so the verify joins
-    # shuffle candidate docs' arrays instead of every document's.
-    candidates = candidates.persist()
-    pair_ids = (
-        candidates.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sh = sigs.select("doc_id", "sh").join(
-        F.broadcast(pair_ids), "doc_id", "left_semi"
-    )
+    sh = sigs.select("doc_id", "sh")
     verified = (
         candidates.join(sh.withColumnRenamed("doc_id", "doc_a")
                         .withColumnRenamed("sh", "sh_a"), "doc_a")
@@ -342,76 +327,72 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
 
     cluster_id = the smallest doc_id reachable through duplicate edges
     (min-label propagation, a.k.a. hash-to-min).  Each iteration is one
-    self-join + aggregate, converging in O(diameter) rounds — duplicate
+    join + aggregate, converging in O(diameter) rounds — duplicate
     clusters are tiny in practice, so 2-3 rounds.  The loop runs on the
-    driver but all data stays distributed (no collect); iteration count is
-    checked with a single count() per round on an aggregated (small) frame.
+    driver but all data stays distributed (no collect).
 
-    Each round truncates lineage with an eager ``localCheckpoint`` —
-    ``labels`` is referenced twice per iteration (neighbor join + change
-    probe), so without truncation the *logical plan* doubles every round
-    and Catalyst analysis goes exponential (a 2 GB plan string by round
-    ~20) even though the data itself is cached.  ``localCheckpoint``
-    stores the materialized partitions and replaces the plan with a leaf;
-    on a real cluster with executor loss, set ``spark.checkpoint.dir``
-    and switch to ``checkpoint()`` for replayability — the label frame is
-    (doc_id, cluster_id) over duplicate docs only, so it is small either
-    way.
+    ``edges`` holds both directions of every pair plus a self-loop per
+    doc, so one round — ``edges ⋈ labels`` on ``b``, grouped by ``a`` —
+    yields both the new label (``min``) and the doc's own old label, and
+    convergence is observed on that same aggregate: one action per round,
+    the eager ``localCheckpoint`` that truncates lineage.  ``labels`` is
+    referenced once per round, and the checkpoint replaces it with a leaf,
+    so every round plans a constant-size query.  On a real cluster with
+    executor loss, set ``spark.checkpoint.dir`` and switch to
+    ``checkpoint()`` for replayability — the label frame is (doc_id,
+    cluster_id) over duplicate docs only, so it is small either way.
 
     Raises RuntimeError when the label propagation has not converged after
     ``max_iterations`` (a duplicate chain longer than the budget) rather
     than silently returning split clusters.
     """
+    a, b = F.col("doc_a"), F.col("doc_b")
     edges = (
-        pairs.selectExpr("doc_a AS a", "doc_b AS b")
-        .unionByName(pairs.selectExpr("doc_b AS a", "doc_a AS b"))
-        .distinct()
-        .persist()
-    )
-    # initial label: own id
-    labels = (
-        edges.select(F.col("a").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .persist()
-    )
-    changed = 0
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges["b"] == labels["doc_id"])
-            .groupBy(edges["a"].alias("doc_id"))
-            .agg(F.min("cluster_id").alias("neighbor_cluster"))
+        pairs.select(
+            F.explode(
+                F.array(*[
+                    F.struct(x.alias("a"), y.alias("b"))
+                    for x, y in ((a, b), (b, a), (a, a), (b, b))
+                ])
+            ).alias("e")
         )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    "cluster_id",
-                    F.coalesce("neighbor_cluster", "cluster_id"),
-                ).alias("cluster_id"),
+        .select("e.a", "e.b")
+        .distinct()
+        .persist()
+    )
+    try:
+        # initial label: own id (one self-loop per doc)
+        labels = edges.filter("a = b").select(
+            F.col("a").alias("doc_id"), F.col("b").alias("cluster_id")
+        )
+        for _ in range(max_iterations):
+            obs = Observation()
+            labels = (
+                edges.join(labels, F.col("b") == F.col("doc_id"))
+                .groupBy(F.col("a").alias("doc_id"))
+                .agg(
+                    F.min("cluster_id").alias("cluster_id"),
+                    F.min(F.when(F.col("a") == F.col("b"), F.col("cluster_id")))
+                    .alias("own"),
+                )
+                .observe(
+                    obs,
+                    F.coalesce(
+                        F.max(F.col("cluster_id") < F.col("own")), F.lit(False)
+                    ).alias("changed"),
+                )
+                .select("doc_id", "cluster_id")
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter("n.cluster_id != o.cluster_id")
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed != 0:
+            if not obs.get["changed"]:
+                return labels
         raise RuntimeError(
             f"duplicate_clusters did not converge in {max_iterations} "
             "iterations — raise max_iterations (a duplicate chain longer "
             "than the budget exists)"
         )
-    return labels
+    finally:
+        edges.unpersist()
 
 
 def keep_cluster_representatives(

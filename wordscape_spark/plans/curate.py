@@ -15,9 +15,11 @@ Scale shape (100 TB):
   join back);
 * exact dedup aggregates (bytehash, doc_id) only and rejoins by doc_id —
   the text column never shuffles for it;
-* near-dedup shuffles MinHash signatures and band keys, never text
-  (operators/dedup.py scale notes); cluster labels are (doc_id,
-  cluster_id) over duplicate docs only;
+* near-dedup shuffles band keys and shingle sets, never text: one band
+  self-join exchange, and the verify joins read every document's
+  shingles by doc_id (operators/dedup.py scale notes); cluster labels
+  are (doc_id, cluster_id) over duplicate docs only, one checkpointed
+  round per propagation step;
 * the token budget is the stream-decomposed window (no per-language
   single-partition sort — operators/shaping.py);
 * each stage consumes the previous one lazily.  The funnel table
