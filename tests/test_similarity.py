@@ -195,3 +195,14 @@ def test_brute_force_pruning_parity_with_allpairs(spark):
 
     empty_q = adv.filter("vec_id > 10000")
     assert SIM.brute_force_topk(adv, empty_q, k=5).collect() == []
+
+
+def test_brute_force_query_side_is_bounded(spark, monkeypatch):
+    """The query set is gathered on the driver: past ``_MAX_QUERY_ROWS``
+    rows brute_force_topk raises a ValueError naming the bound instead of
+    collecting an unbounded relation."""
+    monkeypatch.setattr(SIM, "_MAX_QUERY_ROWS", 2)
+    rows = [(i, [float(i), 1.0]) for i in range(1, 4)]
+    vecs = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    with pytest.raises(ValueError, match="more than 2 query rows"):
+        SIM.brute_force_topk(vecs, vecs, k=1)

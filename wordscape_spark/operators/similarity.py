@@ -100,12 +100,18 @@ def brute_force_topk(
 # there are no false drops.
 _PRUNE_MARGIN = 5e-4
 
+# Query rows gathered on the driver by the brute-force pruning pass.  They
+# are broadcast as one float64 matrix: 50k queries of 1024 dims are
+# ~400 MiB.  A larger query set is an error, not a driver OOM.
+_MAX_QUERY_ROWS = 50_000
+
 
 def _prune_candidates(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
     """Superset-of-top-k candidate pairs: (neighbor_id, cvec, query_id).
 
-    The query side is gathered once (the same bounded relation the
-    all-pairs form broadcast) and shipped to the pruning tasks via a Spark
+    The query side, at most ``_MAX_QUERY_ROWS`` rows (``ValueError``
+    beyond), is gathered once (the same bounded relation the all-pairs
+    form broadcast) and shipped to the pruning tasks via a Spark
     broadcast variable.  Corpus rows whose vector is NULL or whose length
     differs from the query dimension are emitted unpruned for every query
     (their NULL cosine can still be ranked when a query has fewer than k
@@ -114,7 +120,13 @@ def _prune_candidates(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
     from pyspark.sql.types import ArrayType, StructField, StructType
 
     spark = c.sparkSession
-    q_rows = q.collect()
+    q_rows = q.limit(_MAX_QUERY_ROWS + 1).collect()
+    if len(q_rows) > _MAX_QUERY_ROWS:
+        raise ValueError(
+            f"brute_force_topk: more than {_MAX_QUERY_ROWS} query rows "
+            f"(got at least {len(q_rows)}) — the query set is gathered on "
+            "the driver and broadcast; use lsh_topk or ivf_topk"
+        )
     q_ids = [r["query_id"] for r in q_rows]
     q_vecs = [r["qvec"] for r in q_rows]
     dims = {len(v) for v in q_vecs if v is not None}

@@ -28,6 +28,12 @@ this driver loop becomes Iceberg's atomic per-partition commits.
 Per-bucket ``wall_secs`` attributes the shared staging pass proportionally
 to the bucket's row count (the pass classifies all pending buckets at
 once) plus that bucket's own commit time.
+
+The staging write is the run's only Spark job over data.  Per-bucket
+counts come from the staged files' parquet footers, read on the driver —
+the analog of Iceberg's data-file metrics (``record_count``,
+``null_value_counts``), which are merged without rescanning the files —
+and the metrics table is computed from the lineage rows.
 """
 
 from __future__ import annotations
@@ -37,20 +43,23 @@ import pathlib
 import shutil
 import time
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from wordscape_spark.config import DEFAULT_CONFIG, ExtractConfig
 from wordscape_spark.operators import extract as X
 
-LINEAGE_COLS = (
-    "bucket",
-    "status",
-    "n_docs",
-    "n_ok",
-    "n_rejected",
-    "wall_secs",
-    "docs_per_sec",
+LINEAGE_SCHEMA = (
+    "bucket INT, status STRING, n_docs LONG, n_ok LONG, n_rejected LONG, "
+    "wall_secs DOUBLE, docs_per_sec DOUBLE"
+)
+
+# what run_extract_checkpointed returns: the committed bucket dirs read
+# with their known schema (no footer-inference job)
+_COMMITTED_SCHEMA = StructType(
+    X.EXTRACTED_SCHEMA.fields + [StructField("bucket", IntegerType())]
 )
 
 
@@ -58,22 +67,53 @@ def _lineage_path(out_dir: str) -> pathlib.Path:
     return pathlib.Path(out_dir) / "lineage.jsonl"
 
 
+def _lineage_rows(out_dir: str) -> list[dict]:
+    p = _lineage_path(out_dir)
+    if not p.exists():
+        return []
+    return [json.loads(line) for line in p.read_text().splitlines()]
+
+
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     p = _lineage_path(out_dir)
     if not p.exists():
-        return spark.createDataFrame([], "bucket INT, status STRING, n_docs LONG, n_ok LONG, n_rejected LONG, wall_secs DOUBLE, docs_per_sec DOUBLE")
-    return spark.read.json(str(p))
+        return spark.createDataFrame([], LINEAGE_SCHEMA)
+    return spark.read.schema(LINEAGE_SCHEMA).json(str(p))
 
 
 def completed_buckets(out_dir: str) -> set[int]:
-    p = _lineage_path(out_dir)
-    done: set[int] = set()
-    if p.exists():
-        for line in p.read_text().splitlines():
-            row = json.loads(line)
-            if row.get("status") == "done":
-                done.add(int(row["bucket"]))
-    return done
+    return {
+        int(row["bucket"])
+        for row in _lineage_rows(out_dir)
+        if row.get("status") == "done"
+    }
+
+
+def _footer_counts(bucket_dir: pathlib.Path) -> tuple[int, int]:
+    """``(n, n_ok)`` of one bucket directory from its parquet footers, read
+    on the driver: ``n`` sums the row counts, ``n_ok`` the null counts of
+    ``reject_reason`` (NULL exactly on ok rows — every reject carries a
+    reason).  A row group written without a null count is counted from
+    that file's column instead.  A directory with no data files, or none
+    at all, is ``(0, 0)``."""
+    n = n_ok = 0
+    for f in bucket_dir.glob("*.parquet"):
+        if f.name.startswith(("_", ".")):  # hidden, as Spark's listing
+            continue
+        md = pq.read_metadata(f)
+        col = [
+            md.schema.column(i).path for i in range(md.num_columns)
+        ].index("reject_reason")
+        stats = [
+            md.row_group(g).column(col).statistics
+            for g in range(md.num_row_groups)
+        ]
+        if all(st is not None and st.has_null_count for st in stats):
+            n_ok += sum(st.null_count for st in stats)
+        else:
+            n_ok += pq.read_table(f, columns=["reject_reason"])[0].null_count
+        n += md.num_rows
+    return n, n_ok
 
 
 def _read_manifest(staging: pathlib.Path) -> dict | None:
@@ -172,24 +212,16 @@ def run_extract_checkpointed(
                 .parquet(str(staging))
             )
             staging_wall = time.monotonic() - t0
-            # per-bucket counts for proportional wall attribution (reads
-            # only the staged OUTPUT's ok column — never the input again).
+            # per-bucket counts for proportional wall attribution, from the
+            # staged files' footers — never the input, nor the data again.
             # Persisted in the manifest so a commit-only resume attributes
             # staging_wall against the ORIGINAL totals even after some
-            # buckets have been renamed out of staging.
-            if any(staging.glob("bucket=*")):
-                stats = {
-                    int(r["bucket"]): (int(r["n"]), int(r["n_ok"] or 0))
-                    for r in spark.read.parquet(str(staging))
-                    .groupBy("bucket")
-                    .agg(
-                        F.count("*").alias("n"),
-                        F.sum(F.col("ok").cast("long")).alias("n_ok"),
-                    )
-                    .collect()
-                }
-            else:  # every pending bucket was empty
-                stats = {}
+            # buckets have been renamed out of staging.  Empty buckets
+            # wrote no directory and have no entry.
+            stats = {
+                int(d.name.split("=", 1)[1]): _footer_counts(d)
+                for d in staging.glob("bucket=*")
+            }
             (staging / "_manifest.json").write_text(
                 json.dumps(
                     {
@@ -227,23 +259,10 @@ def run_extract_checkpointed(
                 # a prior run crashed BETWEEN this rename and its lineage
                 # append: the data is already in place — keep it (never
                 # wipe a renamed bucket).  Counts normally come from the
-                # manifest's bucket_stats; recount from the files only as
-                # a fallback, guarding the empty-bucket case (a bare dir
-                # committed via mkdir has no parquet files and would raise
-                # "unable to infer schema" on read).
+                # manifest's bucket_stats; otherwise from the committed
+                # files' footers (a bare dir committed via mkdir is 0, 0).
                 if bucket not in stats:
-                    if any(dst.glob("*.parquet")):
-                        res = (
-                            spark.read.parquet(str(dst))
-                            .agg(
-                                F.count("*").alias("n"),
-                                F.sum(F.col("ok").cast("long")).alias("n_ok"),
-                            )
-                            .first()
-                        )
-                        n, n_ok = int(res["n"] or 0), int(res["n_ok"] or 0)
-                    else:
-                        n, n_ok = 0, 0
+                    n, n_ok = _footer_counts(dst)
             else:
                 dst.mkdir(parents=True)  # empty bucket: commit the marker
             wall = (time.monotonic() - t0) + staging_wall * (n / total_staged)
@@ -269,7 +288,8 @@ def run_extract_checkpointed(
     # see an extra int column that only exists because of the checkpoint
     # layout)
     return (
-        spark.read.option("basePath", str(out))
+        spark.read.schema(_COMMITTED_SCHEMA)
+        .option("basePath", str(out))
         .parquet(str(out / "bucket=*"))
         .drop("bucket")
     )
@@ -277,12 +297,23 @@ def run_extract_checkpointed(
 
 def metrics_table(spark: SparkSession, out_dir: str) -> DataFrame:
     """Aggregate run metrics (the reference monitor's pages/s analog,
-    annotate_run.py:65-156) from lineage rows."""
-    lin = read_lineage(spark, out_dir)
-    return lin.agg(
-        F.sum("n_docs").alias("total_docs"),
-        F.sum("n_ok").alias("total_ok"),
-        F.sum("n_rejected").alias("total_rejected"),
-        F.sum("wall_secs").alias("total_wall_secs"),
-        F.expr("round(sum(n_docs) / sum(wall_secs), 3)").alias("docs_per_sec"),
+    annotate_run.py:65-156) from lineage rows.  The sums are taken on the
+    driver and bound as literals of a local relation, so no Spark job runs;
+    ``docs_per_sec`` keeps Spark's ``round`` (HALF_UP) semantics."""
+    rows = _lineage_rows(out_dir)
+
+    def total(key):
+        return sum(r[key] for r in rows) if rows else None
+
+    return spark.sql(
+        """SELECT d AS total_docs, o AS total_ok, r AS total_rejected,
+                  w AS total_wall_secs, round(d / w, 3) AS docs_per_sec
+           FROM VALUES (CAST(:d AS BIGINT), CAST(:o AS BIGINT),
+                        CAST(:r AS BIGINT), CAST(:w AS DOUBLE)) AS t(d, o, r, w)""",
+        args={
+            "d": total("n_docs"),
+            "o": total("n_ok"),
+            "r": total("n_rejected"),
+            "w": total("wall_secs"),
+        },
     )
